@@ -30,7 +30,14 @@ from contextlib import nullcontext  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SETUPS = 3  # set-ups per run; setup_s is their median
+
+
+def catalogue() -> dict[str, dict[str, str]]:
+    """{"end_to_end" | "per_layer": {metric name: unit}} from BENCHMARK.json,
+    the one list of the benchmark's metrics."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    return {kind: {m["name"]: m["unit"] for m in bench[kind]} for kind in ("end_to_end", "per_layer")}
 
 
 def weighted_quantile(samples: list[tuple[float, int]], q: float) -> float:
@@ -102,6 +109,13 @@ def peak_rss_mb(jvm_pid: int) -> float:
     return total_kb / 1024
 
 
+def cpu_times() -> list[int]:
+    """The host-wide ``cpu`` line of /proc/stat (user nice system idle
+    iowait irq softirq steal ...), in clock ticks."""
+    with open("/proc/stat") as f:
+        return [int(x) for x in f.readline().split()[1:]]
+
+
 def harden_env(tmp: str) -> None:
     """Settings the library needs to run from any working directory and
     keep within this host and the run's temp dir."""
@@ -133,6 +147,11 @@ class Session:
         from pyspark import SparkContext
 
         return SparkContext._gateway.proc.pid
+
+    def gc_seconds(self) -> float:
+        """Total time the driver JVM's garbage collectors have run."""
+        beans = self.spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+        return sum(beans.get(i).getCollectionTime() for i in range(beans.size())) / 1e3
 
     def close(self) -> None:
         from pyspark import SparkContext
@@ -173,9 +192,9 @@ def run_batches(w, spark, seconds: float, results: list) -> list:
             return out
 
 
-def end_to_end(timed: list, setups: list[float], jvm_pid: int) -> dict[str, float]:
+def end_to_end(timed: list, setup_s: float, jvm_pid: int) -> dict[str, float]:
     return {
-        "setup_s": statistics.median(setups),
+        "setup_s": setup_s,
         "rows_per_s": sum(r.rows for r in timed) / sum(r.seconds for r in timed),
         "batch_p50_s": statistics.median(r.seconds for r in timed),
         "peak_rss_mb": peak_rss_mb(jvm_pid),
@@ -193,12 +212,15 @@ def freshness(timed: list) -> dict[str, float]:
     }
 
 
-def per_layer(w, spark, seconds: float, results: list, out_dir: str) -> dict[str, float]:
-    from metrics import PER_LAYER, SPAN_METRIC
+def per_layer(w, spark, seconds: float, results: list, out_dir: str, names) -> tuple[dict[str, float], list[str]]:
+    """(per-layer metrics, mismatch messages) of a traced run; ``names``
+    are the per-layer metrics BENCHMARK.json declares."""
+    from metrics import SPAN_METRIC
     from sparkstats import StatusStoreReader
     from spans import Tracer, batch_walls, self_times
 
-    values = {name: 0.0 for name, *_ in PER_LAYER}
+    values = {name: 0.0 for name in names}
+    problems = []
     tracer = Tracer(w.name)
     reader = StatusStoreReader(spark)
     per_batch: list[dict[str, float]] = []
@@ -251,6 +273,9 @@ def per_layer(w, spark, seconds: float, results: list, out_dir: str) -> dict[str
     values["trace.batch_wall_s"] = traced_p50
     values["trace.overhead_ratio"] = traced_p50 / statistics.median(r.seconds for r in untraced)
     if hasattr(w, "ladder"):
+        problem = w.ladder_problem(spark)
+        if problem:
+            problems.append(problem)
         ladders = [w.ladder(spark) for _ in range(2)]
         prev = None
         for rung in ladders[0]:
@@ -263,10 +288,10 @@ def per_layer(w, spark, seconds: float, results: list, out_dir: str) -> dict[str
             prev = rung
     os.makedirs(out_dir, exist_ok=True)
     tracer.dump(os.path.join(out_dir, f"spans-{w.name}-{w.seed}.jsonl"))
-    unknown = set(values) - {name for name, *_ in PER_LAYER}
+    unknown = set(values) - set(names)
     if unknown:
-        raise AssertionError(f"metrics missing from the catalogue: {sorted(unknown)}")
-    return values
+        raise AssertionError(f"metrics missing from BENCHMARK.json: {sorted(unknown)}")
+    return values, problems
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -284,13 +309,16 @@ def main(argv: list[str] | None = None) -> int:
         return 2
     sys.path.insert(0, ROOT)
     sys.path.insert(0, HERE)
-    from metrics import UNITS
     from workloads import SCALES, WORKLOADS
+
+    names = catalogue()
+    units = names["per_layer" if args.trace else "end_to_end"]
 
     if args.workload not in WORKLOADS:
         print(f"perfbench: unknown workload {args.workload!r}; one of {sorted(WORKLOADS)}", file=sys.stderr)
         return 2
 
+    cpu0 = cpu_times()
     t = time.perf_counter()
     invalid = [f"busy at start: {b}" for b in busy_processes()]
     busy_s = time.perf_counter() - t
@@ -298,6 +326,7 @@ def main(argv: list[str] | None = None) -> int:
     harden_env(tmp)
     session = w = None
     results: list = []
+    problems: list[str] = []
     timeline: dict[str, float] = {}  # phase -> seconds since process start
 
     def mark(phase: str) -> None:
@@ -312,34 +341,44 @@ def main(argv: list[str] | None = None) -> int:
         datagen_s = time.perf_counter() - t
         mark("datagen")
 
-        # set-up: instance start + its first batch; the first set-up also
-        # covers process start, imports and the session (JVM launch,
-        # cold caches), the later ones a fresh instance in the live session
-        setups = []
-        for k in range(SETUPS):
-            t = _T0 if k == 0 else time.perf_counter()
-            w.start(session.spark, k)
-            run_batches(w, session.spark, 0, results)
-            setups.append(time.perf_counter() - t - (datagen_s + busy_s if k == 0 else 0))
-            mark(f"setup{k + 1}")
-
+        # set-up: process start (imports, JVM launch, session), instance
+        # start, the cold first batch and the warm-up batches, up to the
+        # first timed batch; input generation and the busy probe are not
+        # part of it
+        t = time.perf_counter()
+        w.start(session.spark)
+        run_batches(w, session.spark, 0, results)
+        first_batch_s = time.perf_counter() - t
+        mark("first_batch")
         w.begin_measure()
+        t = time.perf_counter()
         for _ in range(w.ramp_batches):
             run_batches(w, session.spark, 0, results)
+        ramp_s = time.perf_counter() - t
+        setup_s = time.perf_counter() - _T0 - datagen_s - busy_s
+        mark("ramp")
+        gc0 = session.gc_seconds()
         if args.trace:
-            metrics = per_layer(w, session.spark, args.seconds, results, os.path.join(ROOT, ".perfbench-out"))
-            metrics["session.first_setup_s"] = setups[0]
+            metrics, ladder_problems = per_layer(
+                w, session.spark, args.seconds, results, os.path.join(ROOT, ".perfbench-out"),
+                names["per_layer"],
+            )
+            problems += ladder_problems
+            metrics["session.start_s"] = setup_s - first_batch_s - ramp_s
+            metrics["setup.first_batch_s"] = first_batch_s
+            metrics["setup.ramp_s"] = ramp_s
             metrics["datagen.input_s"] = datagen_s
         else:
             timed = run_batches(w, session.spark, args.seconds, results)
         mark("measure")
-        problems = w.end_measure(session.spark)
+        gc_s = session.gc_seconds() - gc0
+        problems += w.end_measure(session.spark)
         mark("checks")
         if args.trace and hasattr(w, "gen"):
             metrics["generator.max_late_s"] = max(w.gen.lateness, default=0.0)
         invalid += w.invalid_reasons()
         if not args.trace:
-            metrics = end_to_end(timed, setups, session.jvm_pid())
+            metrics = end_to_end(timed, setup_s, session.jvm_pid())
     finally:
         if w is not None:
             w.close()
@@ -352,14 +391,18 @@ def main(argv: list[str] | None = None) -> int:
     failed = sum(1 for r in results if r.problem) or (1 if problems else 0)
     for msg in problems:
         print(f"perfbench: MISMATCH {msg}", file=sys.stderr)
+    # CPU time the hypervisor gave to other guests while this run wanted it
+    cpu = [b - a for a, b in zip(cpu0, cpu_times())]
     summary = {
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
+        "steal_share": round(cpu[7] / sum(cpu), 4),
         "failed_ratio": failed / len(results), "valid": not invalid, "invalid": invalid,
         "timeline_s": timeline,
     }
     if not args.trace:
         summary["batch_s"] = [round(r.seconds, 3) for r in timed]
-        summary["setups_s"] = [round(x, 3) for x in setups]
+        summary["jvm_gc_s"] = round(gc_s, 3)
+        summary["setup_parts_s"] = {"first_batch": round(first_batch_s, 3), "ramp": round(ramp_s, 3)}
         summary.update({k: round(v, 4) for k, v in metrics.items()})
         summary.update({k: round(v, 4) for k, v in freshness(timed).items()})
     print(json.dumps(summary))
@@ -367,7 +410,7 @@ def main(argv: list[str] | None = None) -> int:
         "correct": not problems,
         "attempted": len(results),
         "failed": failed,
-        "metrics": {k: {"value": v, "unit": UNITS[k]} for k, v in metrics.items()},
+        "metrics": {k: {"value": v, "unit": units[k]} for k, v in metrics.items()},
     }))
     return 0 if not problems else 1
 

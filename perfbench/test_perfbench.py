@@ -16,7 +16,7 @@ import sys
 
 import pytest
 
-from metrics import END_TO_END, PER_LAYER
+from metrics import MOVES
 from run import weighted_quantile
 from sparkstats import parse_metric
 from spans import Span, batch_walls, self_times
@@ -71,12 +71,8 @@ def test_weighted_quantile():
     assert weighted_quantile(samples, 1.0) == 3.0
 
 
-def test_benchmark_json_matches_catalogue():
-    bench = _bench_json()
-    assert [(m["name"], m["unit"], m["better"]) for m in bench["end_to_end"]] == END_TO_END
-    assert [(m["name"], m["unit"], m["better"]) for m in bench["per_layer"]] == [
-        (name, unit, better) for name, unit, better, *_ in PER_LAYER
-    ]
+def test_every_per_layer_metric_says_what_it_moves():
+    assert set(MOVES) == {m["name"] for m in _bench_json()["per_layer"]}
 
 
 # tick_stream runs by name only: BENCHMARK.json leaves it out (run budget)

@@ -32,9 +32,10 @@ from collector_spark.sinks.sinks import FileSink, ParquetSink
 from collector_spark.sources.sources import FileSource
 
 SCALES = {
-    # pages per pass; tick lines/s and warm-up lines; backlog lines
-    "full": {"pages": 10_000, "rate": 500, "warm_lines": 500, "backlog": 30_000},
-    "tiny": {"pages": 400, "rate": 100, "warm_lines": 50, "backlog": 2_000},
+    # distinct pages and copies of each (pages per pass = their product);
+    # tick lines/s and warm-up lines; backlog lines
+    "full": {"pages": 5_000, "copies": 8, "rate": 500, "warm_lines": 500, "backlog": 100_000},
+    "tiny": {"pages": 400, "copies": 1, "rate": 100, "warm_lines": 50, "backlog": 2_000},
 }
 
 
@@ -92,8 +93,8 @@ class Workload:
     def generate(self, spark) -> None:
         """Make the inputs from the seed (timed apart from set-up)."""
 
-    def start(self, spark, setup_no: int) -> None:
-        """Start a fresh instance (part of set-up)."""
+    def start(self, spark) -> None:
+        """Start the instance (part of set-up)."""
 
     def prepare(self) -> None:
         """Untimed work before each batch."""
@@ -135,43 +136,45 @@ class PagesFlagship(Workload):
     """Closed loop of back-to-back ``run_pages_pipeline`` passes."""
 
     name = "pages_flagship"
-    # pass time keeps falling over the first several passes while the
-    # JIT warms up (measured: 2.2-2.6 s at the fourth pass, ~1.6 s
-    # steady, 4 vCPUs); timing from the eighth pass keeps most of that
-    # drift out of the run-to-run spread
+    # pass time keeps falling over the first passes while the JIT warms
+    # up; set-up runs these after the cold first pass
     ramp_batches = 4
 
     def generate(self, spark) -> None:
-        """Pages from the repo's generator, written as 8 parquet files
-        in-process (the same rows ``datagen.gen_pages_df`` produces)."""
+        """Pages from the repo's generator (the same rows
+        ``datagen.gen_pages_df`` produces), each distinct page repeated
+        ``copies`` times, written as 8 parquet files in-process. Copies
+        keep input generation short while every row still goes through
+        the whole plan."""
         import pyarrow as pa
 
         self.path = os.path.join(self.tmp, "pages")
         os.makedirs(self.path)
         rows = datagen.gen_pages_local(self.scale["pages"], seed=self.seed)
+        copies = self.scale["copies"]
         for part in range(8):
-            chunk = rows[part::8]
-            pq.write_table(pa.Table.from_pylist(chunk), os.path.join(self.path, f"part-{part:05d}.parquet"))
+            chunk = pa.Table.from_pylist(rows[part::8])
+            pq.write_table(pa.concat_tables([chunk] * copies), os.path.join(self.path, f"part-{part:05d}.parquet"))
         codes: Counter = Counter()
         for page in rows:
             for block in _PRE.findall(page["html"]):
                 for line in html.unescape(block.decode()).split("\n"):
                     if line.startswith("{"):
-                        codes[json.loads(line)["code"]] += 1
+                        codes[json.loads(line)["code"]] += copies
         ok = codes[200]
         errors = sum(n for c, n in codes.items() if c >= 400)
         self.expected = {"ok": ok, "errors": errors, "all": ok + errors}
+        self.rows = self.scale["pages"] * copies
 
     def batch(self, spark) -> BatchResult:
         with self.timed():
             t0 = time.perf_counter()
             out = pages_job.run_pages_pipeline(spark, self.path, seed=self.seed)
             dt = time.perf_counter() - t0
-        n = self.scale["pages"]
         problem = None
         if out["sink_counts"] != self.expected:
             problem = f"route counts {out['sink_counts']} != expected {self.expected}"
-        return BatchResult(n, dt, problem)
+        return BatchResult(self.rows, dt, problem)
 
     def trace(self, tracer) -> None:
         tracer.wrap(pages_job, "run_pages_pipeline", "plans", "plans.run_pages_pipeline")
@@ -180,37 +183,16 @@ class PagesFlagship(Workload):
     def ladder(self, spark) -> dict[str, tuple[float, int]]:
         """Prefix ladder of ``build_pages_agg``: each prefix materialized
         with a noop write (every column computed, unlike ``count()``),
-        the last rung is the job itself. {rung: (seconds, rows out)}."""
+        the last rung is the job itself. {rung: (seconds, rows out)}.
+
+        The prefixes rebuild the job's stages here, so ``ladder_problem``
+        first checks that the last prefix is still the plan under the
+        job's aggregation."""
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        from collector_spark.operators.cel import CelFilter
-        from collector_spark.operators.enrich import url_domain, url_tld
-        from collector_spark.operators.extract import HtmlExtractor
-        from collector_spark.operators.json_mutate import JsonMutator
-
-        # mirrors the body of pages_job.build_pages_agg stage by stage
-        pages = spark.read.parquet(self.path)
-        lookups = datagen.lookup_dfs(spark, self.seed)
-        scan = pages.select("url", "html")
-        lines = HtmlExtractor(engine="native").log_lines(pages, keep_cols=("url",))
-        lines = lines.filter(F.col("value").startswith("{"))
-        cel = CelFilter(rules=["event.code == 200 || event.code >= 400"]).apply(lines)
-        mutated = JsonMutator(add=[{"key": "pipeline", "value": "bench"}], engine="native").apply(cel)
-        enriched = (
-            mutated.withColumn("domain", url_domain(F.col("url")))
-            .withColumn("tld", url_tld(F.col("url")))
-            .join(F.broadcast(lookups["domain_map"]), "domain", "left")
-            .join(F.broadcast(lookups["tld_map"]), "tld", "left")
-        )
         out = {}
-        for rung, df in [
-            ("plans.scan", scan),
-            ("operators.extract", lines),
-            ("operators.cel", cel),
-            ("operators.json_mutate", mutated),
-            ("operators.enrich", enriched),
-        ]:
+        for rung, df in self._prefixes(spark):
             obs = Observation()
             observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
             t0 = time.perf_counter()
@@ -220,6 +202,56 @@ class PagesFlagship(Workload):
         rows = pages_job.build_pages_agg(spark, spark.read.parquet(self.path), self.seed).collect()
         out["operators.aggregate"] = (time.perf_counter() - t0, len(rows))
         return out
+
+    def _prefixes(self, spark) -> list:
+        """[(rung, DataFrame)]: the stages of ``pages_job.build_pages_agg``
+        up to its aggregation, one prefix per stage."""
+        from pyspark.sql import functions as F
+
+        from collector_spark.operators.cel import CelFilter
+        from collector_spark.operators.enrich import url_domain, url_tld
+        from collector_spark.operators.extract import HtmlExtractor
+        from collector_spark.operators.json_mutate import JsonMutator
+
+        pages = spark.read.parquet(self.path)
+        lookups = datagen.lookup_dfs(spark, self.seed)
+        scan = pages.select("url", "html")
+        lines = HtmlExtractor(engine="native").log_lines(pages, keep_cols=("url",))
+        lines = lines.filter(F.col("value").startswith("{"))
+        cel = CelFilter(rules=["event.code == 200 || event.code >= 400"], action="accept").apply(lines)
+        mutated = JsonMutator(add=[{"key": "pipeline", "value": "bench"}], engine="native").apply(cel)
+        enriched = (
+            mutated.withColumn("domain", url_domain(F.col("url")))
+            .withColumn("tld", url_tld(F.col("url")))
+            .join(F.broadcast(lookups["domain_map"]), "domain", "left")
+            .join(F.broadcast(lookups["tld_map"]), "tld", "left")
+        )
+        return [
+            ("plans.scan", scan),
+            ("operators.extract", lines),
+            ("operators.cel", cel),
+            ("operators.json_mutate", mutated),
+            ("operators.enrich", enriched),
+        ]
+
+    def ladder_problem(self, spark) -> str | None:
+        """None when the ladder's last prefix has the same analyzed plan
+        as the input of ``build_pages_agg``'s aggregation, else both
+        plans. Attribute ids (``#123``) differ between two builds of one
+        plan and are left out of the comparison."""
+        enriched = self._prefixes(spark)[-1][1]._jdf.queryExecution().analyzed()
+        job = pages_job.build_pages_agg(spark, spark.read.parquet(self.path), self.seed)
+        node = job._jdf.queryExecution().analyzed()
+        while node.nodeName() != "Aggregate":
+            if node.children().isEmpty():
+                return "build_pages_agg has no Aggregate node"
+            node = node.children().head()
+        ladder, agg_input = (
+            re.sub(r"#\d+", "", p.treeString()) for p in (enriched, node.children().head())
+        )
+        if ladder == agg_input:
+            return None
+        return f"the ladder's prefixes no longer match build_pages_agg:\nladder:\n{ladder}\njob:\n{agg_input}"
 
 
 class DaemonWorkload(Workload):
@@ -359,8 +391,8 @@ class TickStream(DaemonWorkload):
     # from the second on, each tick carries the lines of the previous one
     ramp_batches = 1
 
-    def start(self, spark, setup_no: int) -> None:
-        d = os.path.join(self.tmp, f"tick{setup_no}")
+    def start(self, spark) -> None:
+        d = os.path.join(self.tmp, "tick")
         self.dir = d
         in_dir = os.path.join(d, "in")
         os.makedirs(in_dir)
