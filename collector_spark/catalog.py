@@ -51,10 +51,17 @@ class Catalog:
         the crash happened between the renames — restore the backup so
         the old table stays readable (the compacted copy in
         ``.compact_tmp``, if complete, is re-derivable and is swept by
-        the next compact())."""
+        the next compact()). A reader can also land inside a LIVE
+        compaction's window: if the writer's own rename puts the table
+        back first, the heal rename fails and the table is already
+        whole."""
         backup = path + ".compact_old"
         if not os.path.exists(path) and os.path.exists(backup):
-            os.rename(backup, path)
+            try:
+                os.rename(backup, path)
+            except OSError:
+                if not os.path.exists(path):
+                    raise
 
     def append(self, df: DataFrame, name: str) -> None:
         if _iceberg_available(self.spark, name):

@@ -9,10 +9,11 @@ generalizes this: each sink has an optional CEL-subset predicate
 a row may match multiple sinks.
 
 Physical strategy (scale):
-- the upstream plan is computed ONCE and persisted, then each sink writes
-  a filtered view — N sinks cost one materialization + N cheap filtered
-  passes, not N recomputations (the reference re-reads its temp file per
-  output, manager.go:190-199, which is the same idea on local disk);
+- the upstream plan is computed ONCE (Pipeline.run_batch persists it),
+  then each sink writes a filtered view — N sinks cost one
+  materialization + N cheap filtered passes, not N recomputations (the
+  reference re-reads its temp file per output, manager.go:190-199,
+  which is the same idea on local disk);
 - per-sink aggregate counts come from the same pass via ``groupBy`` over
   a routes array (``explode`` of matched sink names), one shuffle of
   (sink, count) partials only — map-side combined, tiny at any scale.
@@ -25,7 +26,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark import StorageLevel
 
 from collector_spark.operators.cel import CelFilter, ColumnCompiler, SqlCompiler, parse_rule
 
@@ -55,7 +55,7 @@ class Router:
     """Fan a DataFrame out to named routes.
 
     with_routes()   → adds an array<string> ``routes`` column (matched sinks)
-    split()         → {sink_name: filtered DataFrame view} over a persisted parent
+    split()         → {sink_name: filtered DataFrame view} of one parent
     sink_counts()   → DataFrame (sink, cnt) per-sink aggregate counts
     """
 
@@ -89,10 +89,9 @@ class Router:
         )
         return df.withColumn(out_col, arr)
 
-    def split(self, df: DataFrame, persist: bool = True) -> dict[str, DataFrame]:
-        """One persisted parent, N filtered children (write each to its sink)."""
-        if persist:
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    def split(self, df: DataFrame) -> dict[str, DataFrame]:
+        """N filtered children of one parent (write each to its sink);
+        the caller persists the parent so the children share its pass."""
         return {name: df.filter(col) for name, col in self._route_cols()}
 
     def sink_counts(self, df: DataFrame) -> DataFrame:

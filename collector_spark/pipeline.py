@@ -24,6 +24,7 @@ import os
 import uuid
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -232,45 +233,52 @@ class Pipeline:
     def _run_batch_inner(
         self, df: DataFrame, batch_id: int, source_state: dict | None
     ) -> BatchRecord:
-        if self.quarantine_sink is not None:
-            return self._run_batch_quarantine(df, batch_id, source_state)
-
+        """One sink loop for both modes: persist one parent (the
+        transformed frame, or the tagged frame in quarantine mode), write
+        every routed view of the surviving rows, then the dead-letter
+        view, count surviving rows per cached partition, commit."""
         observations: dict[str, Observation] = {}
-        out = self.transform(df, observations=observations)
+        if self.quarantine_sink is None:
+            parent = kept = self.transform(df, observations=observations)
+            dead_letter = []
+        else:
+            parent, kept, quarantined = self.transform_tagged(df)
+            dead_letter = [("__quarantine__", self.quarantine_sink, quarantined)]
+        routed = (
+            [(n, self.sinks[n], view) for n, view in self.router.split(kept).items()]
+            if self.router is not None
+            else []
+        )
+        writes = routed + dead_letter
 
         per_sink: dict[str, int] = {}
         per_sink_empty: dict[str, int] = {}
         per_sink_retry: dict[str, int] = {}
         partition_counts: dict[str, int] = {}
-        wrote_any = False
-        if self.router is not None:
-            views = self.router.split(out, persist=True)
+        if writes:
+            parent.persist(StorageLevel.MEMORY_AND_DISK)
             try:
-                for name, view in views.items():
-                    sink = self.sinks[name]
+                for name, sink, view in writes:
                     per_sink[name] = sink.write(view, batch_id=batch_id)
                     metrics = getattr(sink, "last_metrics", None) or {}
                     if metrics.get("empty"):
                         per_sink_empty[name] = metrics["empty"]
                     if metrics.get("retries"):
                         per_sink_retry[name] = metrics["retries"]
-                    wrote_any = True
                 # per-partition lineage over the persisted parent (cheap:
                 # no recompute, one count per cached partition)
                 partition_counts = {
                     str(r.pid): r.rows
-                    for r in out.groupBy(
-                        F.spark_partition_id().alias("pid")
-                    )
+                    for r in kept.groupBy(F.spark_partition_id().alias("pid"))
                     .agg(F.count(F.lit(1)).alias("rows"))
                     .collect()
                 }
             finally:
-                out.unpersist()
+                parent.unpersist()
 
         per_stage = (
             {name: int(obs.get["rows"]) for name, obs in observations.items()}
-            if wrote_any and observations
+            if writes
             else {}
         )
         record = BatchRecord(
@@ -284,54 +292,6 @@ class Pipeline:
         )
         if self.manifest is not None:
             self.manifest.commit(record)  # AFTER sinks — reference order
-        return record
-
-    def _run_batch_quarantine(
-        self, df: DataFrame, batch_id: int, source_state: dict | None
-    ) -> BatchRecord:
-        """run_batch with the dead-letter path: one persisted tagged pass;
-        kept rows fan out to the routed sinks, dropped rows (original
-        value + first failing stage) go to the quarantine sink."""
-        from pyspark import StorageLevel
-
-        tagged, kept, quarantined = self.transform_tagged(df)
-        tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-        per_sink: dict[str, int] = {}
-        per_sink_empty: dict[str, int] = {}
-        per_sink_retry: dict[str, int] = {}
-        partition_counts: dict[str, int] = {}
-        try:
-            if self.router is not None:
-                views = self.router.split(kept, persist=False)
-                for name, view in views.items():
-                    sink = self.sinks[name]
-                    per_sink[name] = sink.write(view, batch_id=batch_id)
-                    metrics = getattr(sink, "last_metrics", None) or {}
-                    if metrics.get("empty"):
-                        per_sink_empty[name] = metrics["empty"]
-                    if metrics.get("retries"):
-                        per_sink_retry[name] = metrics["retries"]
-            per_sink["__quarantine__"] = self.quarantine_sink.write(
-                quarantined, batch_id=batch_id
-            )
-            partition_counts = {
-                str(r.pid): r.rows
-                for r in kept.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count(F.lit(1)).alias("rows"))
-                .collect()
-            }
-        finally:
-            tagged.unpersist()
-        record = BatchRecord(
-            batch_id=batch_id,
-            source_state=source_state or {},
-            per_sink_counts=per_sink,
-            per_sink_empty_counts=per_sink_empty,
-            per_sink_retry_counts=per_sink_retry,
-            partition_counts=partition_counts,
-        )
-        if self.manifest is not None:
-            self.manifest.commit(record)
         return record
 
     def run_tick(self, spark: SparkSession, on_error: str = "raise") -> BatchRecord:

@@ -108,3 +108,40 @@ def test_compact_crash_recovery(spark, tmp_path):
     assert not os.path.exists(path + ".compact_tmp")
     assert not os.path.exists(path + ".compact_old")
     assert cat.read_table("db.r").count() == 200
+
+
+def test_read_inside_live_compaction_rename_window(spark, tmp_path, monkeypatch):
+    """A reader that sees the table path missing and .compact_old present
+    while compaction is still live: the writer's rename(tmp -> path)
+    lands before the reader's heal rename(backup -> path). The read must
+    not raise and must see every row."""
+    import os
+    import shutil
+
+    from collector_spark.catalog import Catalog
+
+    cat = Catalog(spark, root=str(tmp_path))
+    cat.append(spark.range(0, 200), "db.w")
+    path = os.path.join(str(tmp_path), "db", "w")
+    tmp, backup = path + ".compact_tmp", path + ".compact_old"
+
+    # compaction state between its two renames: new copy complete in
+    # .compact_tmp, old table moved to .compact_old
+    shutil.copytree(path, tmp)
+    os.rename(path, backup)
+
+    real_rename = os.rename
+
+    def writer_lands_first(src, dst):
+        if (src, dst) == (backup, path):
+            real_rename(tmp, path)  # the writer's second rename wins
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", writer_lands_first)
+    out = cat.read_table("db.w")
+    monkeypatch.undo()
+
+    assert out.count() == 200
+    assert os.path.exists(backup)  # left for the writer's cleanup
+    shutil.rmtree(backup)  # the writer finishes its swap
+    assert cat.read_table("db.w").count() == 200

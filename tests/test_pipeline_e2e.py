@@ -6,6 +6,7 @@ multiple sinks; per-sink counts), and at-least-once resume idempotence
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from collector_spark import datagen, oracle
@@ -36,7 +37,7 @@ def test_router_multi_match_and_counts(spark):
     # 'not json' predicates eval to null→False but the all route still matches
     assert counts == {"all_events": 4, "ok": 2, "big": 1}
 
-    views = router.split(df, persist=False)
+    views = router.split(df)
     assert {r.value for r in views["ok"].collect()} == {events[0], events[2]}
     assert {r.value for r in views["big"].collect()} == {events[2]}
     assert views["all_events"].count() == 4
@@ -229,10 +230,13 @@ def test_pipeline_surfaces_empty_line_counts(spark, tmp_path):
     assert committed.per_sink_empty_counts == {"out": 3}
 
 
-def test_pipeline_surfaces_retry_counts(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["filter", "quarantine"])
+def test_pipeline_surfaces_retry_counts(spark, tmp_path, mode):
     """A sink that needed retries reports them through last_metrics into
     BatchRecord.per_sink_retry_counts and the committed manifest (the
-    reference's RetryCount in PipelineResults, pkg/core/channel.go:3-8)."""
+    reference's RetryCount in PipelineResults, pkg/core/channel.go:3-8).
+    In quarantine mode the flaky sink is the dead-letter sink: every row
+    fails the cel stage and lands there."""
     import os
 
     marker_dir = tmp_path / "tries"
@@ -246,27 +250,29 @@ def test_pipeline_surfaces_retry_counts(spark, tmp_path):
         return 200
 
     df = spark.createDataFrame([("alpha",), ("beta",)], "value string").coalesce(1)
-    config = PipelineConfig(
-        instance_id="r1",
-        sinks=[
-            SinkSpec(
-                "web",
-                "http",
-                None,
-                {
-                    "url": "http://example.invalid/x",
-                    "poster": flaky_poster,
-                    "retry_wait": 0,
-                },
-            )
-        ],
-    )
+    http = {
+        "url": "http://example.invalid/x",
+        "poster": flaky_poster,
+        "retry_wait": 0,
+    }
+    if mode == "filter":
+        name = "web"
+        config = PipelineConfig(
+            instance_id="r1", sinks=[SinkSpec(name, "http", None, http)]
+        )
+    else:
+        name = "__quarantine__"
+        config = PipelineConfig(
+            instance_id="r1",
+            processors=[{"kind": "cel", "rules": ["event.code == 200"]}],
+            quarantine={"kind": "http", **http},
+        )
     pipe = Pipeline(config, state_dir=str(tmp_path / "state"))
     record = pipe.run_batch(df, batch_id=0)
-    assert record.per_sink_counts == {"web": 2}
-    assert record.per_sink_retry_counts == {"web": 2}
+    assert record.per_sink_counts == {name: 2}
+    assert record.per_sink_retry_counts == {name: 2}
     committed = Manifest(str(tmp_path / "state"), "r1").load()[-1]
-    assert committed.per_sink_retry_counts == {"web": 2}
+    assert committed.per_sink_retry_counts == {name: 2}
 
 
 def test_status_rollup_and_error_drop(spark, tmp_path):

@@ -33,10 +33,28 @@ def test_kv_parser_spark(spark):
     assert out[0].parsed == oracle.parse_kv(KV1)
 
 
+def _kv_expected(lines):
+    out = {}
+    for l in lines:
+        s = l.strip()
+        if not s:
+            continue
+        try:
+            out[l] = oracle.parse_kv(s)
+        except oracle.ParseError:
+            pass
+    return out
+
+
+def _kv_rows(spark, lines):
+    df = spark.createDataFrame([(l,) for l in lines], ["value"])
+    return {r.value: dict(r.parsed) for r in KvParser(type="raw").apply(df).collect()}
+
+
 def test_kv_native_engine_matches_oracle(spark):
-    """The zero-Python native kv path must agree with oracle.parse_kv on
-    every line: same surviving rows, same maps (incl. first-'=' split,
-    empty-value stripping, trailing-kv removal, last-dup-wins)."""
+    """The kv UDF must agree with oracle.parse_kv on every line: same
+    surviving rows, same maps (incl. first-'=' split, empty-value
+    stripping, trailing-kv removal, last-dup-wins, unicode whitespace)."""
     lines = [
         KV1,
         KV2,
@@ -53,26 +71,16 @@ def test_kv_native_engine_matches_oracle(spark):
         "a=b  c=d",              # multiple spaces between tokens
         "  a=b c= ",             # leading/trailing space + empty-valued kv
         "a=b tail=",             # trailing 'key=' at end of line stripped
+        "a=1\u00a0b=2",          # NO-BREAK SPACE separates tokens
+        "\u0085a=1 b=2\u0085",   # NEXT LINE stripped from both ends
     ]
-    df = spark.createDataFrame([(l,) for l in lines], ["value"])
-    native = {
-        r.value: dict(r.parsed)
-        for r in KvParser(type="raw", engine="native").apply(df).collect()
-    }
-    expected = {}
-    for l in lines:
-        s = l.strip()
-        if not s:
-            continue
-        try:
-            expected[l] = oracle.parse_kv(s)
-        except oracle.ParseError:
-            pass
-    assert native == expected, (native, expected)
+    got = _kv_rows(spark, lines)
+    expected = _kv_expected(lines)
+    assert got == expected, (got, expected)
 
 
 def test_kv_native_engine_fuzz(spark):
-    """200 seeded random kv-ish lines: native and oracle paths must agree
+    """200 seeded random kv-ish lines: the UDF and the oracle must agree
     on which lines survive AND on every parsed map."""
     import random
 
@@ -83,21 +91,7 @@ def test_kv_native_engine_fuzz(spark):
         return "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 24)))
 
     lines = [rand_line() for _ in range(200)]
-    df = spark.createDataFrame([(l,) for l in lines], ["value"])
-    native = {
-        r.value: dict(r.parsed)
-        for r in KvParser(type="raw", engine="native").apply(df).collect()
-    }
-    expected = {}
-    for l in lines:
-        s = l.strip()
-        if not s:
-            continue
-        try:
-            expected[l] = oracle.parse_kv(s)
-        except oracle.ParseError:
-            pass
-    assert native == expected
+    assert _kv_rows(spark, lines) == _kv_expected(lines)
 
 
 def _cef_expected(lines):
@@ -113,9 +107,9 @@ def _cef_expected(lines):
     return out
 
 
-def _cef_native_rows(spark, lines):
+def _cef_rows(spark, lines):
     df = spark.createDataFrame([(l,) for l in lines], ["value"])
-    rows = KvParser(type="cef", engine="native").apply(df).collect()
+    rows = KvParser(type="cef").apply(df).collect()
     return {
         r.value: {
             "version": r.parsed.version,
@@ -132,8 +126,9 @@ def _cef_native_rows(spark, lines):
 
 
 def test_cef_native_engine_matches_oracle(spark):
-    """Zero-Python CEF path vs oracle on the reference fixture vectors +
-    escape/placeholder edge cases (cef_test.go:5-156 semantics)."""
+    """CEF UDF vs oracle on the reference fixture vectors + escape/
+    placeholder and unicode-whitespace edge cases (cef_test.go:5-156
+    semantics)."""
     lines = [
         CEF1,
         CEF2,
@@ -148,8 +143,10 @@ def test_cef_native_engine_matches_oracle(spark):
         "CEF:0|v|p|1|i|n|5|url=http://x/y a=b",   # colon placeholder path
         "notcef|only|three",                        # <7 fields → drop
         "X:0|v|p|1|i|n|5|a=b",                     # bad prefix → drop
+        "CEF:0|v|p|1|i|n|5|a=1\u00a0b=2",          # NO-BREAK SPACE in extensions
+        "\u0085CEF:0|v|p|1|i|n|5|a=b c=d\u0085",   # NEXT LINE stripped from both ends
     ]
-    assert _cef_native_rows(spark, lines) == _cef_expected(lines)
+    assert _cef_rows(spark, lines) == _cef_expected(lines)
 
 
 def test_cef_native_engine_fuzz(spark):
@@ -163,7 +160,7 @@ def test_cef_native_engine_fuzz(spark):
         return rng.choice(["CEF:0|", "1|", ""]) + core
 
     lines = list({rand_line() for _ in range(250)})
-    assert _cef_native_rows(spark, lines) == _cef_expected(lines)
+    assert _cef_rows(spark, lines) == _cef_expected(lines)
 
 
 def test_cef_parser_spark(spark):
@@ -288,13 +285,12 @@ def test_syslog_rfc5424_nil_sd_keeps_bracket_leading_msg(spark):
 
 def test_cef_version_is_first_colon_segment_both_engines(spark):
     """cef.go:52-61 takes only the segment between the 1st and 2nd
-    colon; non-Atoi bare versions are dropped by both engines."""
+    colon; non-Atoi bare versions are dropped."""
     line = "CEF:0:junk|v|p|1.0|id|name|5|src=1.2.3.4"
     df = spark.createDataFrame([(line,), ("1_2|v|p|1.0|id|name|5|src=a",)], ["value"])
-    for engine in ("pandas", "native"):
-        out = KvParser(type="cef", engine=engine).apply(df).collect()
-        assert len(out) == 1, engine  # the 1_2 version line is dropped
-        assert out[0].parsed.version == "0", engine
+    out = KvParser(type="cef").apply(df).collect()
+    assert len(out) == 1  # the 1_2 version line is dropped
+    assert out[0].parsed.version == "0"
 
 
 def test_json_native_add_is_safe_on_nested_and_null_values(spark):
