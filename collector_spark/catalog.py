@@ -135,7 +135,10 @@ class Catalog:
         window is healed by ``_recover_compaction`` (called here and on
         every ``read_table``), which renames the ``.compact_old`` backup
         back into place — so a crash never LOSES the table, it only
-        rolls the compaction back. The fallback assumes a single writer:
+        rolls the compaction back. If a reader heals the backup while
+        this compaction is still live, the second rename fails and the
+        compaction is lost: its copy is swept and the stats describe the
+        table as it now is. The fallback assumes a single writer:
         rows appended concurrently with the rewrite are not in the
         snapshot being compacted and are dropped by the swap (use the
         Iceberg path when concurrent appenders exist — its REPLACE
@@ -188,8 +191,18 @@ class Catalog:
             writer = writer.partitionBy(partition_col)
         writer.parquet(tmp)
         os.rename(path, backup)
-        os.rename(tmp, path)
-        shutil.rmtree(backup)
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            # a reader healed .compact_old back between the two renames
+            # (ENOTEMPTY): the old table is whole again, so the
+            # compaction is lost — sweep its copy and report the table
+            # as it now is
+            if not os.path.exists(path):
+                raise
+            shutil.rmtree(tmp)
+        else:
+            shutil.rmtree(backup)
         return {"files_before": before, "files_after": n_files(), "rows": rows}
 
     @staticmethod

@@ -43,6 +43,11 @@ class LookupEnricher:
 
     config: {on: fact key column (or expression name created first),
              lookup: DataFrame, how: 'left' (default)}
+
+    ``lookup`` should be driver-local (``createDataFrame`` of a pandas
+    frame, an Arrow ``LocalRelation``) or cached: the broadcast re-scans
+    it on every query, and a lookup built from a list of rows is a
+    ``PythonRDD`` whose every scan is a Spark job with Python workers.
     """
 
     def __init__(self, lookup: DataFrame, on: str, how: str = "left"):

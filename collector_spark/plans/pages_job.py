@@ -8,6 +8,10 @@ row carries the per-route match sums, so per-sink counts (sum over
 categories) and the category rollup come from a single map + one tiny
 shuffle.
 
+The lookups are driver-local ``LocalRelation``s (``datagen.lookup_dfs``),
+so the broadcast enrich runs no Spark job and no Python worker of its
+own: a whole pass is JVM-only.
+
 Used by bench.py (throughput + scaling evidence) and by
 tests/test_plans_scale.py (physical-plan assertions: exactly one
 exchange, broadcast-only joins, html-only-in-scan).

@@ -145,3 +145,37 @@ def test_read_inside_live_compaction_rename_window(spark, tmp_path, monkeypatch)
     assert os.path.exists(backup)  # left for the writer's cleanup
     shutil.rmtree(backup)  # the writer finishes its swap
     assert cat.read_table("db.w").count() == 200
+
+
+def test_compaction_lost_to_reader_heal(spark, tmp_path, monkeypatch):
+    """The writer's side of the same window: a reader heals .compact_old
+    back into place after compact()'s first rename, so the writer's
+    rename(tmp -> path) hits a non-empty table dir. compact() must treat
+    the compaction as lost: no raise, its .compact_tmp swept, every row
+    still readable."""
+    import os
+
+    from collector_spark.catalog import Catalog
+
+    cat = Catalog(spark, root=str(tmp_path))
+    cat.append(spark.range(0, 200).repartition(4), "db.h")
+    cat.append(spark.range(200, 400).repartition(4), "db.h")
+    path = os.path.join(str(tmp_path), "db", "h")
+    tmp, backup = path + ".compact_tmp", path + ".compact_old"
+
+    real_rename = os.rename
+
+    def reader_heals_first(src, dst):
+        if (src, dst) == (tmp, path):
+            real_rename(backup, path)  # the reader's heal wins
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", reader_heals_first)
+    stats = cat.compact("db.h")
+    monkeypatch.undo()
+
+    assert stats["rows"] == 400
+    assert stats["files_after"] == stats["files_before"]  # the old table
+    assert not os.path.exists(tmp)
+    assert not os.path.exists(backup)
+    assert cat.read_table("db.h").count() == 400

@@ -195,6 +195,18 @@ def test_quarantine_second_stage_failure(spark, tmp_path):
 def test_enrich_broadcast_plan_and_values(spark):
     pages = datagen.gen_pages_df(spark, 40, partitions=2).drop("html")
     lookups = datagen.lookup_dfs(spark)
+    # driver-local Arrow LocalRelations with the row-built frames'
+    # schemas; a silent fallback to the pickled path (Arrow off or
+    # failing) would analyze to a LogicalRDD
+    schemas = {
+        "lang_map": "struct<lang:string,lang_family:string,lang_name:string>",
+        "domain_map": "struct<category:string,domain:string,reputation:bigint>",
+        "tld_map": "struct<country:string,tld:string>",
+    }
+    assert set(lookups) == set(schemas)
+    for name, lookup in lookups.items():
+        assert lookup._jdf.queryExecution().analyzed().nodeName() == "LocalRelation", name
+        assert lookup.schema.simpleString() == schemas[name], name
     enriched = enrich_pages(pages, lookups)
     rows = enriched.select("url", "domain", "tld", "category", "country", "lang", "lang_name").collect()
     assert len(rows) == 40

@@ -58,6 +58,10 @@ def test_pages_job_plan_shape(spark, pages_path):
     plan = executed_plan(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
+    # the lookup dims are driver-local LocalTableScans: a row-built
+    # (PythonRDD) lookup would show as "Scan ExistingRDD" and cost a
+    # Python-worker job per broadcast
+    assert "ExistingRDD" not in plan
     # one data exchange for the final groupBy (+ broadcast exchanges,
     # which are not shuffles)
     import re
