@@ -88,22 +88,26 @@ class Manifest:
                     out.append(BatchRecord(**json.loads(line)))
         return out
 
-    def last_state(self) -> dict:
-        """Resume token: source state of the HIGHEST committed batch id
-        (reference LoadState, internal/cli/state.go:28-37). Not
-        records[-1]: commit() of a replayed older batch rewrites that
+    def resume_point(self) -> tuple[int, dict]:
+        """(highest committed batch id, its source state) from ONE load;
+        (-1, {}) when nothing is committed. The resume token is that of
+        the HIGHEST id (reference LoadState, internal/cli/state.go:28-37),
+        not records[-1]: commit() of a replayed older batch rewrites that
         record at the END of the file, and taking insertion order would
         roll the resume token back — the next tick would then reuse an
         already-committed batch id, skip the freshly-read data as a
         duplicate, and still ack it (data loss)."""
         records = self.load()
         if not records:
-            return {}
-        return max(records, key=lambda r: r.batch_id).source_state
+            return -1, {}
+        last = max(records, key=lambda r: r.batch_id)
+        return last.batch_id, last.source_state
+
+    def last_state(self) -> dict:
+        return self.resume_point()[1]
 
     def last_batch_id(self) -> int:
-        records = self.load()
-        return max((r.batch_id for r in records), default=-1)
+        return self.resume_point()[0]
 
     def committed(self, batch_id: int) -> bool:
         return any(r.batch_id == batch_id for r in self.load())

@@ -301,9 +301,9 @@ class Pipeline:
         Batch ids auto-increment from the manifest."""
         if self.source is None:
             raise ValueError("run_tick needs a config with an 'input' block")
-        state = self.manifest.last_state() if self.manifest else {}
+        last_id, state = self.manifest.resume_point() if self.manifest else (-1, {})
         df, new_state = self.source.read_new(spark, state)
-        batch_id = (self.manifest.last_batch_id() + 1) if self.manifest else 0
+        batch_id = last_id + 1
         ack = getattr(self.source, "commit_read", None)
         try:
             record = self.run_batch(
@@ -314,10 +314,9 @@ class Pipeline:
                 ack(False)  # leave messages unacked → queue redelivers
             raise
         if ack is not None:
-            committed = not record.failed and (
-                self.manifest is None or self.manifest.committed(batch_id)
-            )
-            ack(committed)
+            # a non-failed record means run_batch committed this id (or
+            # skipped it as already committed) — no manifest re-read
+            ack(not record.failed)
         return record
 
     def sink_counts(self, df: DataFrame) -> DataFrame:

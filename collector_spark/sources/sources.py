@@ -36,6 +36,21 @@ from pyspark.sql import functions as F
 _WS_EDGE = _re.compile(r"^[ \t\x0B\f\r]+|[ \t\x0B\f\r]+$")
 
 
+def lines_frame(spark: SparkSession, lines: list[str]) -> DataFrame:
+    """Driver-held lines as a ``value: string`` frame — the one way a
+    source turns what it read into rows.
+
+    Non-empty: the distributed row-built frame (a large tail stays off
+    the driver's single thread; as a ``LocalRelation`` its projections
+    would run there). Empty: a frame that optimizes to an empty
+    ``LocalRelation`` and plans no task — a row-built frame of zero rows
+    is still a 4-partition ``LogicalRDD`` over a ``PythonRDD``, so every
+    action on it (or on a union with it) runs 4 Python tasks."""
+    if lines:
+        return spark.createDataFrame([(l,) for l in lines], "value: string")
+    return spark.sql("SELECT CAST(NULL AS STRING) AS value WHERE false")
+
+
 class FileSource:
     """Batch file input with byte-offset resume per file.
 
@@ -49,7 +64,10 @@ class FileSource:
     in bounded chunks to a local spill file (the reference's own
     TmpWriter architecture, pkg/core/tmp_writer.go) and read back with
     ``spark.read.text`` — distributed scan, driver RAM bounded at the
-    copy-buffer size regardless of backlog.
+    copy-buffer size regardless of backlog. A tick builds only the
+    frames it has: an all-spilled tick is the spill scan alone (no
+    union with an empty driver frame), and a tick with nothing new
+    plans no task (``lines_frame``'s empty frame).
 
     Cleanup/deletion ordering (at-least-once): consumed-source deletion
     (``delete=True``) and spill-file cleanup happen in ``commit_read``,
@@ -172,22 +190,20 @@ class FileSource:
                 state.pop(fpath, None)
                 self._pending_deletes.append((fpath, size))
         self._pending_spills.extend(spilled)
-        df = spark.createDataFrame([(l,) for l in lines] or [], "value: string")
-        if spilled:
-            # same edge-whitespace class as the driver path (F.trim strips
-            # spaces only — a tab-padded line would survive here but not
-            # there, making row values depend on which path the tail took)
-            big = (
-                spark.read.text(spilled)
-                .select(
-                    F.regexp_replace(
-                        "value", r"^[ \t\x0B\f\r]+|[ \t\x0B\f\r]+$", ""
-                    ).alias("value")
-                )
-                .filter(F.length("value") > 0)
+        if not spilled:
+            return lines_frame(spark, lines), state
+        # same line breaks (\n only: text() alone also breaks on a lone
+        # \r) and edge-whitespace class as the driver path, or row values
+        # would depend on which path the tail took
+        big = (
+            spark.read.option("lineSep", "\n")
+            .text(spilled)
+            .select(
+                F.regexp_replace("value", _WS_EDGE.pattern, "").alias("value")
             )
-            df = df.unionAll(big)
-        return df, state
+            .filter(F.length("value") > 0)
+        )
+        return (lines_frame(spark, lines).unionAll(big) if lines else big), state
 
     def stream(self, spark: SparkSession) -> DataFrame:
         """Structured Streaming variant (exactly-once file tracking)."""
@@ -483,10 +499,8 @@ class HttpPollerSource:
                     break
         except Exception:
             # window failed → cursor unchanged, rows dropped (retry next tick)
-            df = spark.createDataFrame([], "value: string")
-            return df, dict(state or {"last_ts": start})
-        df = spark.createDataFrame([(l,) for l in items] or [], "value: string")
-        return df, {"last_ts": end}
+            return lines_frame(spark, []), dict(state or {"last_ts": start})
+        return lines_frame(spark, items), {"last_ts": end}
 
 
 class QueuePollerSource:
@@ -538,7 +552,7 @@ class QueuePollerSource:
             if len(batch) < self.max_messages:
                 break
         self._pending_receipts.extend(receipts)
-        df = spark.createDataFrame([(l,) for l in lines] or [], "value: string")
+        df = lines_frame(spark, lines)
         new_state = dict(state or {})
         new_state["polled"] = new_state.get("polled", 0) + len(lines)
         return df, new_state

@@ -393,6 +393,29 @@ def test_run_tick_config_driven_input(spark, tmp_path):
     assert m.last_batch_id() == 2
 
 
+def test_run_tick_loads_manifest_three_times(spark, tmp_path, monkeypatch):
+    """One tick reads the manifest once for resume (state + next id), once
+    for run_batch's already-committed check and once inside commit — no
+    separate last_state/last_batch_id loads, no post-commit re-check."""
+    (tmp_path / "app.log").write_text('{"code": 200}\n')
+    config = PipelineConfig(
+        instance_id="loads",
+        input={"kind": "file", "path": str(tmp_path / "*.log")},
+        processors=[{"kind": "cel", "rules": ["event.code == 200"]}],
+        sinks=[SinkSpec("out", "file", None, {"path": str(tmp_path / "out")})],
+    )
+    pipe = Pipeline(config, state_dir=str(tmp_path / "state"))
+    pipe.run_tick(spark)  # a committed batch, so resume has a record to read
+    calls = []
+    load = Manifest.load
+    monkeypatch.setattr(Manifest, "load", lambda self: calls.append(1) or load(self))
+    with open(tmp_path / "app.log", "a") as f:
+        f.write('{"code": 200}\n')
+    r1 = pipe.run_tick(spark)
+    assert (r1.batch_id, r1.per_sink_counts) == (1, {"out": 1})
+    assert len(calls) == 3
+
+
 def test_config_dir_loading(tmp_path):
     conf = {
         "instance_id": "",

@@ -429,6 +429,96 @@ def test_file_source_spills_large_tails_off_driver(spark, tmp_path):
     assert [r.value for r in df3.collect()] == ["row-100"]
 
 
+def test_file_source_spill_splits_lines_like_driver_path(spark, tmp_path):
+    """Only \n ends a line on both paths: spark.read.text alone also
+    breaks on a lone \r, so the spilled tail used to yield different rows
+    than the same bytes read on the driver."""
+    (tmp_path / "a.log").write_bytes(b"one\rtwo\nthree\r\nfour\n")
+    got = {}
+    for limit in (1 << 20, 4):
+        src = FileSource(
+            str(tmp_path / "*.log"), max_driver_bytes=limit,
+            spill_dir=str(tmp_path / f"spill{limit}"),
+        )
+        df, _ = src.read_new(spark, None)
+        got[limit] = [r.value for r in df.collect()]
+        src.commit_read(True)
+    assert got[1 << 20] == ["one\rtwo", "three", "four"]
+    assert got[4] == got[1 << 20]
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def test_file_source_all_spilled_tick_is_the_spill_scan_alone(spark, tmp_path):
+    """No empty row-built frame (a LogicalRDD over a PythonRDD: 4 Python
+    tasks per action) is unioned into an all-spilled tick."""
+    (tmp_path / "big.log").write_text("".join(f"row-{i}\n" for i in range(50)))
+    src = FileSource(
+        str(tmp_path / "*.log"), max_driver_bytes=16, spill_dir=str(tmp_path / "spill")
+    )
+    df, _ = src.read_new(spark, None)
+    plan = _analyzed(df)
+    assert "LogicalRDD" not in plan and "ExistingRDD" not in plan
+    assert "Union" not in plan
+    assert df.count() == 50
+    src.commit_read(True)
+
+
+def test_file_source_mixed_tick_unions_driver_and_spill_rows(spark, tmp_path):
+    """A small file (driver path) and a large one (spill path) in the same
+    glob: both files' rows come back, through the union."""
+    (tmp_path / "a_small.log").write_text("s1\ns2\n")
+    (tmp_path / "b_big.log").write_text("".join(f"b{i}\n" for i in range(20)))
+    src = FileSource(
+        str(tmp_path / "*.log"), max_driver_bytes=16, spill_dir=str(tmp_path / "spill")
+    )
+    df, state = src.read_new(spark, None)
+    assert "Union" in _analyzed(df)
+    assert sorted(r.value for r in df.collect()) == sorted(
+        ["s1", "s2"] + [f"b{i}" for i in range(20)]
+    )
+    assert len(state) == 2
+    src.commit_read(True)
+
+
+def _nothing_new_file(spark, tmp_path):
+    (tmp_path / "a.log").write_text("x\n")
+    src = FileSource(str(tmp_path / "*.log"), spill_dir=str(tmp_path / "spill"))
+    _, state = src.read_new(spark, None)
+    return src.read_new(spark, state)[0]
+
+
+def _nothing_new_queue(spark, tmp_path):
+    from collector_spark.sources.sources import QueuePollerSource
+
+    return QueuePollerSource(lambda n: [], max_messages=4).read_new(spark, None)[0]
+
+
+def _nothing_new_http(spark, tmp_path):
+    from collector_spark.sources.sources import HttpPollerSource
+
+    src = HttpPollerSource(lambda s, e, t: ([], None), now_fn=lambda: "2024-01-02T00:00:00")
+    return src.read_new(spark, None)[0]
+
+
+@pytest.mark.parametrize(
+    "read", [_nothing_new_file, _nothing_new_queue, _nothing_new_http],
+    ids=["file", "queue", "http_poller"],
+)
+def test_nothing_new_read_plans_no_task(spark, tmp_path, read):
+    """A tick with nothing new optimizes to an empty LocalRelation (no
+    task, no Python worker) and keeps the value: string schema."""
+    df = read(spark, tmp_path)
+    optimized = df._jdf.queryExecution().optimizedPlan()
+    assert optimized.nodeName() == "LocalRelation"
+    assert optimized.toString().startswith("LocalRelation <empty>")
+    assert df.schema.simpleString() == "struct<value:string>"
+    assert df.schema["value"].nullable
+    assert df.collect() == []
+
+
 def test_file_source_delete_deferred_to_commit(spark, tmp_path):
     """delete=True removes a consumed file only after commit_read(True);
     a failed batch keeps it so the un-advanced offset re-reads (the
